@@ -60,10 +60,6 @@ object Relational {
       .agg(count(lit(1)).as("n"))
       .filter(col("n") > 1)
 
-  /** T2 — dbt `not_null` test: rows violating a non-null contract. */
-  def nullViolations(df: DataFrame, c: String): DataFrame =
-    df.filter(col(c).isNull)
-
   /** T3 — dbt `accepted_values` test as a left-anti join against the
     * accepted literal list (reference: dbt/models/marts/schema.yml:40-42).
     * NULLs are excluded to match SQL `NOT IN` semantics.

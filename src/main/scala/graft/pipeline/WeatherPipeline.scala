@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.ops.Relational
+import graft.quality.Checks
+import graft.quality.Checks.{AcceptedValues, Check, NotNull, Unique}
 
 /** The reference pipeline (bronze → silver → gold) re-expressed as pure
   * DataFrame functions. Reference: caphey/weather-api-automate-etl —
@@ -16,7 +18,7 @@ import graft.ops.Relational
   *
   * Orchestration collapses to function composition (SURVEY.md §3.1): the
   * Airflow task chain becomes `ingest → stg → {dim, fct}` with the dbt
-  * tests as violation-DataFrame assertions between stages. At scale the
+  * tests as `quality.Checks` contracts asserted between stages. At scale the
   * mart writes partition by `extraction_date` so daily re-runs overwrite
   * one partition instead of the table.
   */
@@ -164,37 +166,22 @@ object WeatherPipeline {
       col("extracted_at"),
       col("data_interval_start"))
 
-  /** dbt test suite (SURVEY.md §2.9) as violation DataFrames; the pipeline
-    * gate is `violations.isEmpty`, exactly like `dbt test` returning 0
-    * rows. */
-  object Tests {
-    val TemperatureCategories = Seq("Freezing", "Cold", "Mild", "Warm", "Hot")
+  /** The reference's dbt tests (SURVEY.md §2.9) as data contracts, one
+    * per gated table; `runBatch` proceeds iff every check reports 0
+    * violations, exactly like `dbt test` returning 0 rows.
+    *
+    * Source tier (`dbt/models/staging/_staging__sources.yml`): raw.weather
+    * id unique + not_null, city not_null, extracted_at not_null. */
+  val rawContract: Seq[Check] =
+    Seq(Unique(Seq("id")), NotNull("id"), NotNull("city"), NotNull("extracted_at"))
 
-    def uniqueLocationKey(dim: DataFrame): DataFrame =
-      Relational.duplicates(dim, Seq("location_key"))
+  /** Marts tier (`dbt/models/marts/schema.yml`). */
+  val dimContract: Seq[Check] =
+    Seq(Unique(Seq("location_key")), NotNull("location_key"), NotNull("total_observations"))
 
-    def notNull(df: DataFrame, cols: Seq[String]): DataFrame =
-      cols.map(Relational.nullViolations(df, _)).reduce(_ unionByName _)
-
-    def acceptedTemperatureCategories(fct: DataFrame): DataFrame =
-      Relational.acceptedValuesViolations(fct, "temperature_category", TemperatureCategories)
-
-    /** Source-tier tests (`dbt/models/staging/_staging__sources.yml`:
-      * raw.weather id unique + not_null, city not_null, extracted_at
-      * not_null) — the gate the DAG runs as `dbt test --select staging`
-      * (step 4) BEFORE `dbt run --select marts` (step 5): a source-tier
-      * failure must short-circuit the chain before any mart is built. */
-    def sourceTests(raw: DataFrame): Map[String, DataFrame] = Map(
-      "unique_raw_weather_id" -> Relational.duplicates(raw, Seq("id")),
-      "not_null_raw_weather" -> notNull(raw, Seq("id", "city", "extracted_at")))
-
-    /** All gates; pipeline proceeds iff every frame is empty. */
-    def all(dim: DataFrame, fct: DataFrame): Map[String, DataFrame] = Map(
-      "unique_dim_locations_location_key" -> uniqueLocationKey(dim),
-      "not_null_dim_locations" -> notNull(dim, Seq("location_key", "total_observations")),
-      "not_null_fct" -> notNull(fct, Seq("observation_id", "location_key", "extracted_at")),
-      "accepted_values_temperature_category" -> acceptedTemperatureCategories(fct))
-  }
+  val fctContract: Seq[Check] = Seq(
+    NotNull("observation_id"), NotNull("location_key"), NotNull("extracted_at"),
+    AcceptedValues("temperature_category", Seq("Freezing", "Cold", "Mild", "Warm", "Hot")))
 
   /** Structured Streaming variant (SURVEY.md §7.2-5): the SAME ingest +
     * staging transforms run incrementally over a JSON landing directory —
@@ -230,6 +217,11 @@ object WeatherPipeline {
     * marts → test → write. Throws on test failure like the DAG's failing
     * dbt_test task.
     *
+    * The tests run as two gate actions, each one `Checks.assertAll`
+    * count: raw.weather's contract before any mart is built, then the
+    * dim_locations and fct_weather_observations contracts together before
+    * either mart is written.
+    *
     * Scale posture: `raw` is persisted across its four consumers (raw
     * append + two marts + tests) instead of re-parsing the payloads per
     * sink, and the fact write goes through DYNAMIC partition overwrite
@@ -239,25 +231,21 @@ object WeatherPipeline {
     */
   def runBatch(payloads: DataFrame, dataIntervalStart: Timestamp, now: Timestamp,
                outDir: String): Unit = {
-    def gate(tests: Map[String, DataFrame]): Unit =
-      tests.foreach { case (name, violations) =>
-        val n = violations.limit(1).count()
-        require(n == 0, s"data-quality test failed: $name")
-      }
     val raw = ingest(payloads, dataIntervalStart, now)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       raw.write.mode("append").parquet(s"$outDir/raw/weather")
       // GATE 1 — source-tier tests (DAG step 4): a failure short-circuits
       // here, before any mart is BUILT, mirroring dbt_test >> dbt_run_marts.
-      gate(Tests.sourceTests(raw))
+      Checks.assertAll(("raw.weather", raw, rawContract))
       val stg = stgWeather(raw)
       val dim = dimLocations(stg)
       val fct = fctWeatherObservations(stg)
       // GATE 2 — marts-tier tests (DAG step 6). Stricter than the DAG by
       // design: dbt writes the marts in step 5 and validates after; here
       // the tests gate the WRITES, so a failing mart never goes live.
-      gate(Tests.all(dim, fct))
+      Checks.assertAll(("dim_locations", dim, dimContract),
+        ("fct_weather_observations", fct, fctContract))
       dim.write.mode("overwrite").parquet(s"$outDir/marts/dim_locations")
       graft.sources.IO.writePartitioned(fct, Seq("extraction_date"),
         s"$outDir/marts/fct_weather_observations")

@@ -12,98 +12,66 @@ import graft.ops.Relational
   *
   *   val checks = Seq(Unique(Seq("id")), NotNull("city"),
   *                    AcceptedValues("cat", Seq("a", "b")), InRange("t", -50, 60))
-  *   Checks.report(df, checks)     // one row per check with violation count
-  *   Checks.assertAll(df, checks)  // throw on first failure (pipeline gate)
+  *   Checks.reportDf(df, checks)               // one row per check with violation count
+  *   Checks.assertAll(("t", df, checks), ...)  // throw if any check fails (pipeline gate)
   *
-  * Each check compiles to a violations DataFrame (the dbt "test query
-  * returns 0 rows" contract) — fully distributed, nothing collects
-  * besides the per-check limit-1 existence probe in assertAll and the
-  * aggregated counts in report.
+  * `reportDf` is the one evaluator: every row-predicate check fuses into
+  * a single conditional-aggregate scan and each Unique check adds one
+  * key-pruned aggregate branch. `assertAll` gates any number of tables
+  * with one `count` over their unioned reports — fully distributed,
+  * nothing collects unless a check fails.
   */
 object Checks {
 
-  sealed trait Check {
-    def name: String
-    def violations(df: DataFrame): DataFrame
+  sealed trait Check { def name: String }
 
-    /** Row-level violation predicate, when the check is expressible per
-      * row: lets `report` fuse every such check into ONE conditional
-      * aggregate pass. None for checks that need grouping (Unique). */
-    def rowViolation: Option[Column] = None
-  }
+  /** A check each row passes or fails on its own: `violation` is the
+    * row-level predicate, so `reportDf` fuses every such check into ONE
+    * conditional-aggregate pass. */
+  sealed trait RowCheck extends Check { def violation: Column }
 
   /** dbt `unique` (composite keys allowed). Not a row predicate — its
     * violation count is "number of duplicated key groups". */
   final case class Unique(cols: Seq[String]) extends Check {
     val name = s"unique_${cols.mkString("_")}"
-    def violations(df: DataFrame): DataFrame = Relational.duplicates(df, cols)
   }
 
   /** dbt `not_null`. */
-  final case class NotNull(col0: String) extends Check {
+  final case class NotNull(col0: String) extends RowCheck {
     val name = s"not_null_$col0"
-    def violations(df: DataFrame): DataFrame = Relational.nullViolations(df, col0)
-    override def rowViolation: Option[Column] = Some(col(col0).isNull)
+    def violation: Column = col(col0).isNull
   }
 
   /** dbt `accepted_values` (NULLs pass, like SQL NOT IN). */
-  final case class AcceptedValues(col0: String, values: Seq[String]) extends Check {
+  final case class AcceptedValues(col0: String, values: Seq[String]) extends RowCheck {
     val name = s"accepted_values_$col0"
-    def violations(df: DataFrame): DataFrame =
-      Relational.acceptedValuesViolations(df, col0, values)
-    override def rowViolation: Option[Column] =
-      Some(col(col0).isNotNull && !col(col0).isin(values.map(_.asInstanceOf[Any]): _*))
+    def violation: Column =
+      col(col0).isNotNull && !col(col0).isin(values.map(_.asInstanceOf[Any]): _*)
   }
 
   /** Closed-range test (the reference's unimplemented roadmap item,
     * README.md:126: temperature plausibility). NULLs pass — combine with
     * NotNull to reject them. */
-  final case class InRange(col0: String, lo: Double, hi: Double) extends Check {
+  final case class InRange(col0: String, lo: Double, hi: Double) extends RowCheck {
     val name = s"in_range_$col0"
-    def violations(df: DataFrame): DataFrame =
-      df.filter(col(col0).isNotNull && !col(col0).between(lo, hi))
-    override def rowViolation: Option[Column] =
-      Some(col(col0).isNotNull && !col(col0).between(lo, hi))
+    def violation: Column = col(col0).isNotNull && !col(col0).between(lo, hi)
   }
 
   /** Arbitrary predicate that every row must satisfy. */
-  final case class Satisfies(name: String, predicateSql: String) extends Check {
-    def violations(df: DataFrame): DataFrame = df.filter(s"NOT ($predicateSql)")
-    override def rowViolation: Option[Column] = Some(not(expr(predicateSql)))
+  final case class Satisfies(name: String, predicateSql: String) extends RowCheck {
+    def violation: Column = not(expr(predicateSql))
   }
 
-  /** One row per check: (check, n_violations, passed). All row-predicate
-    * checks (not_null / accepted_values / in_range / satisfies) fuse into
-    * a SINGLE conditional-aggregate scan — one job however many checks —
-    * and only grouping checks (Unique) cost an extra aggregation each. */
-  def report(df: DataFrame, checks: Seq[Check]): Seq[(String, Long, Boolean)] = {
-    val fused = checks.zipWithIndex
-      .collect { case (c, i) => c.rowViolation.map(p => (i, c, p)) }.flatten
-    val fusedCounts: Map[Int, Long] =
-      if (fused.isEmpty) Map.empty
-      else {
-        val aggs = fused.map { case (i, _, p) =>
-          coalesce(sum(when(p, 1L).otherwise(0L)), lit(0L)).as(s"c_$i")
-        }
-        val row = df.agg(aggs.head, aggs.tail: _*).head()
-        fused.map { case (i, _, _) => i -> row.getAs[Long](s"c_$i") }.toMap
-      }
-    checks.zipWithIndex.map { case (c, i) =>
-      val n = fusedCounts.getOrElse(i, c.violations(df).count())
-      (c.name, n, n == 0)
-    }
-  }
-
-  /** [[report]] as a DataFrame — the form a contract dashboard or a
-    * downstream gate table consumes, and the form the oracle can verify.
-    * Same fusion contract: every row-predicate check becomes one entry of
-    * an array-of-structs built in a SINGLE conditional-aggregate scan
+  /** One row per check: (check, n_violations, passed) — the form a
+    * contract dashboard or a downstream gate table consumes, and the form
+    * the oracle can verify. Every row-predicate check becomes one entry
+    * of an array-of-structs built in a SINGLE conditional-aggregate scan
     * (one job however many checks, map-side partials) and exploded to
     * (check, n_violations) rows; each grouping check (Unique) contributes
     * its own aggregate branch, unioned — at scale the branches
     * parallelize and none reads more than its key columns. */
   def reportDf(df: DataFrame, checks: Seq[Check]): DataFrame = {
-    val fused = checks.flatMap(c => c.rowViolation.map(p => (c.name, p)))
+    val fused = checks.collect { case c: RowCheck => (c.name, c.violation) }
     val fusedDf =
       if (fused.isEmpty) Seq.empty[DataFrame]
       else Seq(
@@ -114,8 +82,8 @@ object Checks {
           .select(explode(col("cs")).as("kv"))
           .select(col("kv.check").as("check"), col("kv.n_violations").as("n_violations")))
     val grouped = checks.collect {
-      case c if c.rowViolation.isEmpty =>
-        c.violations(df)
+      case c @ Unique(cols) =>
+        Relational.duplicates(df, cols)
           .agg(count(lit(1)).as("n_violations"))
           .select(lit(c.name).as("check"), col("n_violations"))
     }
@@ -124,14 +92,23 @@ object Checks {
       .withColumn("passed", col("n_violations") === 0L)
   }
 
-  /** Pipeline gate: throws on the first failing check (mirrors the
-    * reference DAG failing on dbt test, dags/weatherstack_full_pipeline
-    * .py:147-151). Uses a limit-1 existence probe, not a full count. */
-  def assertAll(df: DataFrame, checks: Seq[Check]): Unit =
-    checks.foreach { c =>
-      require(c.violations(df).limit(1).count() == 0,
-        s"data-quality check failed: ${c.name}")
+  /** Pipeline gate over any number of (table, frame, contract) triples
+    * (mirrors the reference DAG failing on dbt test,
+    * dags/weatherstack_full_pipeline.py:147-151). The tables' reports are
+    * unioned with each check named `table.check`, and ONE `count` of the
+    * failing rows decides; only when it is non-zero are the failing names
+    * collected, every one of them listed in the exception message. */
+  def assertAll(contracts: (String, DataFrame, Seq[Check])*): Unit = {
+    val failing = contracts.map { case (table, df, checks) =>
+      reportDf(df, checks).select(concat_ws(".", lit(table), col("check")).as("check"),
+        col("passed"))
+    }.reduce(_.unionAll(_)).filter(!col("passed")).select(col("check"))
+    if (failing.count() > 0) {
+      val names = failing.collect().map(_.getString(0)).sorted
+      throw new IllegalArgumentException(
+        s"data-quality check failed: ${names.mkString(", ")}")
     }
+  }
 
   /** Per-column data PROFILE — the table-summary report of dbt docs /
     * Deequ-style profilers: one row per profiled column with row count,

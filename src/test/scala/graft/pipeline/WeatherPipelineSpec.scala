@@ -68,15 +68,84 @@ class WeatherPipelineSpec extends SparkSpec {
   }
 
   test("data-quality gates pass on clean data and catch violations") {
-    val stg = WeatherPipeline.stgWeather(WeatherPipeline.ingest(payloads, t0, now))
+    import graft.quality.Checks
+    val raw = WeatherPipeline.ingest(payloads, t0, now)
+    val stg = WeatherPipeline.stgWeather(raw)
     val dim = WeatherPipeline.dimLocations(stg)
     val fct = WeatherPipeline.fctWeatherObservations(stg)
-    WeatherPipeline.Tests.all(dim, fct).foreach { case (name, violations) =>
-      assert(violations.isEmpty, s"unexpected violations in $name")
+    Seq(raw -> WeatherPipeline.rawContract, dim -> WeatherPipeline.dimContract,
+      fct -> WeatherPipeline.fctContract).foreach { case (df, contract) =>
+      Checks.reportDf(df, contract).collect().foreach { r =>
+        assert(r.getAs[Boolean]("passed"), s"unexpected violations in ${r.getAs[String]("check")}")
+      }
     }
-    // inject a bad category → accepted_values must flag it
+    // inject a bad category → accepted_values must flag every row
     val bad = fct.withColumn("temperature_category", lit("Scorching"))
-    assert(WeatherPipeline.Tests.acceptedTemperatureCategories(bad).count() == bad.count())
+    val flagged = Checks.reportDf(bad, WeatherPipeline.fctContract)
+      .filter($"check" === "accepted_values_temperature_category")
+      .select("n_violations").as[Long].collect()
+    assert(flagged.toSeq == Seq(bad.count()))
+  }
+
+  test("every contract check, broken alone, fails the gate under its table.check name") {
+    import graft.quality.Checks
+    import graft.quality.Checks._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.StructType
+    val raw = WeatherPipeline.ingest(payloads, t0, now)
+    val stg = WeatherPipeline.stgWeather(raw)
+    val tables = Seq(
+      ("raw.weather", raw, WeatherPipeline.rawContract),
+      ("dim_locations", WeatherPipeline.dimLocations(stg), WeatherPipeline.dimContract),
+      ("fct_weather_observations", WeatherPipeline.fctWeatherObservations(stg),
+        WeatherPipeline.fctContract))
+    // Local copies with every column nullable, so one row can be broken in
+    // place and the optimizer cannot fold a non-null column's check away.
+    def local(df: DataFrame, rows: Seq[Row]): DataFrame = spark.createDataFrame(
+      java.util.Arrays.asList(rows: _*), StructType(df.schema.map(_.copy(nullable = true))))
+    def set(df: DataFrame, rows: Seq[Row], c: String, v: Any): Seq[Row] =
+      rows.updated(0, Row.fromSeq(rows.head.toSeq.updated(df.schema.fieldIndex(c), v)))
+    Checks.assertAll(tables: _*)
+    for ((table, df, contract) <- tables; check <- contract) {
+      val rows = df.collect().toSeq
+      Checks.assertAll((table, local(df, rows), contract))
+      val broken = check match {
+        case Unique(_) => rows :+ rows.head
+        case NotNull(c) => set(df, rows, c, null)
+        case AcceptedValues(c, _) => set(df, rows, c, "Scorching")
+        case other => fail(s"no corruption for $other")
+      }
+      val gated = tables.map { case t @ (name, d, cs) =>
+        if (name == table) (name, local(d, broken), cs) else t
+      }
+      val e = intercept[IllegalArgumentException](Checks.assertAll(gated: _*))
+      assert(e.getMessage == s"data-quality check failed: $table.${check.name}")
+    }
+  }
+
+  test("a clean runBatch issues two gate actions besides its writes") {
+    import org.apache.spark.ListenerBusDrain
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val actions = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        actions.add(funcName)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        actions.add(funcName)
+    }
+    val dir = java.nio.file.Files.createTempDirectory("wp-actions").toString
+    ListenerBusDrain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try WeatherPipeline.runBatch(payloads, t0, now, dir)
+    finally {
+      ListenerBusDrain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    val all = actions.asScala.toSeq
+    assert(all.count(_ == "command") == 3, all) // raw, dim and fct writes
+    assert(all.filterNot(_ == "command") == Seq("count", "count"), all)
   }
 
   test("end-to-end: JSON landing files → permissive source → pipeline → partitioned marts") {
@@ -159,7 +228,7 @@ class WeatherPipelineSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException] {
       WeatherPipeline.runBatch(dup, t0, now, dir2)
     }
-    assert(e.getMessage.contains("unique_raw_weather_id"))
+    assert(e.getMessage.contains("raw.weather.unique_id"))
     assert(new java.io.File(s"$dir2/raw/weather").exists()) // raw landed (step 2 ran)
     assert(!new java.io.File(s"$dir2/marts").exists(),
       "a failing staging test must short-circuit before any mart write")
